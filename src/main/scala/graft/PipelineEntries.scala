@@ -67,8 +67,8 @@ object PipelineEntries {
     *
     * The expensive corpus-scale stages behind the dedup/ANN entries —
     * the hashed-shingle signature table, the shared-shingle pair counts,
-    * the verified jaccard>=0.5 pair set, the shingle document
-    * frequencies, the IVF index — are prepare-once-query-many, exactly
+    * the verified jaccard>=0.5 pair set, the rep-collapse index, the
+    * IVF index — are prepare-once-query-many, exactly
     * like the rollup layouts. They are therefore materialized as ZSTD
     * parquet under `target/prepared/pipeline/<corpus>/<name>` on first
     * use and READ back on every use after that, including from a fresh
@@ -78,10 +78,8 @@ object PipelineEntries {
     * from raw text, and the hash-verified jaccard equals the
     * string-verified one (hashing preserves set cardinalities w.h.p.).
     *
-    * The per-(session, key) memo keeps repeated queries from re-listing
-    * the directory. */
-  private val artifactMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
+    * The per-(session, key) memo ([[memo]]) keeps repeated queries from
+    * re-listing the directory. */
   private val artifactLock = new Object
   /** Bump whenever the BUILD LOGIC of any artifact changes (edits to
     * Dedup / Similarity / Quantization / this file): the version is part
@@ -94,8 +92,8 @@ object PipelineEntries {
     * trainPq / encodePq / ivfTrain / encode WITHOUT a bump silently
     * reuses stale coded corpora that the oracle then "confirms" (it
     * reads the same stale parquet) — advisor, round 19. */
-  private[graft] val ArtifactVersion = 7
-  private def artifactRoot(dir: String): String =
+  private[graft] val ArtifactVersion = 8
+  private[graft] def artifactRoot(dir: String): String =
     s"target/prepared/pipeline/v$ArtifactVersion/" +
       dir.replaceAll("[^A-Za-z0-9.]+", "_")
   private def artifactPath(dir: String, name: String): String =
@@ -110,20 +108,39 @@ object PipelineEntries {
   private[graft] def resolveOracle(sql: String, dir: String): String =
     sql.replace(ArtifactToken,
       new java.io.File(artifactRoot(dir)).getAbsolutePath)
-  private def artifact(s: SparkSession, dir: String, name: String)
-                      (build: => DataFrame): DataFrame = {
+
+  /** Per-(session, corpus, name) memo of everything built from the
+    * prepare artifacts: the artifact scans themselves and the trained
+    * state collected back from them. Artifact names and trained-state
+    * names share one key space.
+    *
+    * NOT computeIfAbsent: builds are recursive (pair_counts builds from
+    * docSigs, which re-enters this memo under a different key; trained
+    * state re-enters [[artifact]]), and a nested computeIfAbsent on the
+    * same ConcurrentHashMap throws IllegalStateException("Recursive
+    * update") or livelocks when the keys land in the same bin. get, then
+    * a build under [[artifactLock]], then put: the lock is reentrant, so
+    * nested lookups from inside a build are safe, and a key is built at
+    * most once per session. */
+  private val memoMap =
+    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]
+  private[graft] def memo[T <: AnyRef](s: SparkSession, dir: String,
+                                       name: String)(build: => T): T = {
     val key = s.sparkContext.applicationId + ":" + dir + ":" + name
-    // NOT computeIfAbsent: artifact builds are recursive (pair_counts
-    // builds from docSigs, which re-enters this map under a different
-    // key), and a nested computeIfAbsent on the same ConcurrentHashMap
-    // throws IllegalStateException("Recursive update") or livelocks when
-    // the keys land in the same bin. get + reentrant-synchronized build +
-    // put: nested lookups never run inside a CHM mapping function.
-    val hit = artifactMemo.get(key)
-    if (hit != null) return hit
+    val hit = memoMap.get(key)
+    if (hit != null) return hit.asInstanceOf[T]
     artifactLock.synchronized {
-      val again = artifactMemo.get(key)
-      if (again != null) return again
+      val again = memoMap.get(key)
+      if (again != null) return again.asInstanceOf[T]
+      val v = build
+      memoMap.put(key, v)
+      v
+    }
+  }
+
+  private def artifact(s: SparkSession, dir: String, name: String)
+                      (build: => DataFrame): DataFrame =
+    memo(s, dir, name) {
       val path = artifactPath(dir, name)
       if (!new java.io.File(s"$path/_SUCCESS").exists())
         build.write.mode("overwrite")
@@ -136,12 +153,9 @@ object PipelineEntries {
       // re-reading a constant index table per pass is not part of any
       // operator's cost (round-8 bench showed +31% on the blocked
       // jaccard from exactly that re-read).
-      val df = s.read.parquet(path)
+      s.read.parquet(path)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      artifactMemo.put(key, df)
-      df
     }
-  }
 
   /** Hashed-shingle signature table (Dedup.signatures): the headline
     * dedup queries (minhash, exact/blocked n-gram jaccard, clusters) all
@@ -190,49 +204,67 @@ object PipelineEntries {
     artifact(s, dir, "pairs_j05")(
       Dedup.jaccardFromPairCounts(docPairCounts(s, dir), threshold = 0.5))
 
-  /** Shingle document-frequency table over the exact-text
-    * REPRESENTATIVES of [[docSigs]] (Dedup.repSignatures): the blocked
-    * jaccard's candidate filter and the stop-shingle profile both read
-    * this |vocab| table. Rep-based since round 13 — the blocked
-    * contract counts df over distinct-text representatives, so replica
-    * factors never inflate a shingle past dfCap. */
-  private def docShingleDf(s: SparkSession, dir: String): DataFrame =
-    artifact(s, dir, "shingle_df")(
-      Dedup.shingleDocFreq(Dedup.repSignatures(docSigs(s, dir))._2))
-
   /** Shared rep-collapse index over [[docSigs]] — three prepare-once
     * artifacts (round 20) consumed by every rep-based set-overlap pass
     * (blocked jaccard, stop-profile pairs, stop-profile families):
     * `rep_map` (g, id, cnt), `rep_sigs` (id, hs), and `rep_inverted`
-    * (id, g, c) — the df-CLASSIFIED inverted index (rep-based df >= 2).
+    * (id, g, c) — the df-CLASSIFIED inverted index (rep-based df >= 2),
+    * all three written from ONE [[Dedup.repIndexFromSigs]] build.
     * Before round 20 each invocation re-derived all three per pass
     * (a corpus aggregate + a join + an explode-join-persist); both the
     * rare-candidate branch (c <= dfCap) and the stop-profile branch
     * (c > dfCap) are now filters over the persisted classified index —
-    * the [[docShingleDf]]/[[docPairCounts]] discipline. Cap-agnostic:
-    * the operators apply their own dfCap filters, so blocked (cap 10)
-    * and the stop passes (cap 5) read the same three tables. */
-  private val repIdxMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Dedup.RepIndex]
-  private def repIndex(s: SparkSession, dir: String): Dedup.RepIndex = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    val hit = repIdxMemo.get(key)
-    if (hit != null) return hit
-    artifactLock.synchronized {
-      val again = repIdxMemo.get(key)
-      if (again != null) return again
-      val rep = artifact(s, dir, "rep_map")(
-        Dedup.repSignatures(docSigs(s, dir))._1)
-      val repSigs = artifact(s, dir, "rep_sigs")(
-        Dedup.repSignatures(docSigs(s, dir))._2)
-      val inverted = artifact(s, dir, "rep_inverted")(
-        repSigs.select(col("id"), explode(col("hs")).as("g"))
-          .join(docShingleDf(s, dir).filter(col("c") >= 2), Seq("g"))
-          .select(col("id"), col("g"), col("c")))
-      val v = Dedup.RepIndex(rep, repSigs, inverted)
-      repIdxMemo.put(key, v)
-      v
+    * the [[docPairCounts]] discipline. Cap-agnostic: the operators apply
+    * their own dfCap filters, so blocked (cap 10) and the stop passes
+    * (cap 5) read the same three tables. */
+  private def repIndex(s: SparkSession, dir: String): Dedup.RepIndex =
+    memo(s, dir, "rep_index") {
+      lazy val built = Dedup.repIndexFromSigs(docSigs(s, dir))
+      Dedup.RepIndex(artifact(s, dir, "rep_map")(built.rep),
+        artifact(s, dir, "rep_sigs")(built.repSigs),
+        artifact(s, dir, "rep_inverted")(built.inverted))
     }
+
+  /** Centroids written as an `(bucket, centroid)` artifact and COLLECTED
+    * BACK from the written table, so the engine and the DuckDB oracle
+    * consume literally the same state: every value is float-representable
+    * (float-rounded Lloyd means; init vectors are corpus floats), so the
+    * parquet round trip is bit-exact. */
+  private def centroidArtifact(s: SparkSession, dir: String, name: String)
+                              (train: => Array[Seq[Float]]): Array[Seq[Float]] =
+    artifact(s, dir, name) {
+      import s.implicits._
+      train.toSeq.zipWithIndex
+        .map { case (v, i) => (i, v) }.toDF("bucket", "centroid")
+    }.orderBy(col("bucket"))
+      .select(col("centroid")).collect().map(_.getSeq[Float](0))
+
+  /** PQ codebooks written as an `(s, j, cent: array<double>)` artifact
+    * and COLLECTED BACK from the written table — the [[centroidArtifact]]
+    * discipline: every value is float-representable (trainPq
+    * float-rounds means; init subvectors are corpus floats), so the
+    * write/read round trip is bit-exact. m*k*(dim/m) doubles: driver
+    * state stays codebook-sized by contract. */
+  private def codebookArtifact(s: SparkSession, dir: String, name: String)
+      (train: => Array[Array[Array[Double]]]): Array[Array[Array[Double]]] = {
+    val rows = artifact(s, dir, name) {
+      import s.implicits._
+      train.zipWithIndex.flatMap { case (sub, si) =>
+        sub.zipWithIndex.map { case (cw, j) => (si, j, cw.toSeq) }
+      }.toSeq.toDF("s", "j", "cent")
+    }.collect()
+    val m = rows.map(_.getInt(0)).max + 1
+    val kk = rows.map(_.getInt(1)).max + 1
+    // completeness: a truncated/partial artifact read would otherwise
+    // leave null cells surfacing as an opaque NPE far from the cause
+    // (advisor, round 19)
+    require(rows.length == m * kk,
+      s"$name incomplete: ${rows.length} rows for ${m}x$kk")
+    val out = Array.ofDim[Array[Double]](m, kk)
+    rows.foreach { r =>
+      out(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray
+    }
+    out
   }
 
   /** IVF index (Lloyd-trained centroids + bucketed corpus) — index
@@ -240,40 +272,15 @@ object PipelineEntries {
     * (`ivf_centroids`, `ivf_buckets`); the per-query cost is nprobe
     * bucket joins + exact re-rank. Centroids are nlist x dim — bounded
     * driver state by contract, collected from the written table. */
-  // NOT computeIfAbsent, for all three trained-state memos below: the
-  // build closures run Spark actions and re-enter artifact() (and could
-  // re-enter EACH OTHER from a future artifact build), and a nested
-  // re-entry inside a ConcurrentHashMap mapping function throws
-  // IllegalStateException("Recursive update") or livelocks. Same
-  // get + reentrant-synchronized-build + put discipline as artifact()
-  // itself, on the same lock (reentrant, so artifact() calls inside the
-  // build are safe).
-  private val ivfMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Seq[Float]], DataFrame)]
-  private def ivfIndex(s: SparkSession, dir: String): (Array[Seq[Float]], DataFrame) = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    val hit = ivfMemo.get(key)
-    if (hit != null) return hit
-    artifactLock.synchronized {
-      val again = ivfMemo.get(key)
-      if (again != null) return again
-      val centDf = artifact(s, dir, "ivf_centroids") {
-        val trained = Similarity.ivfTrain(embeddings(s, dir),
-          "vec_id", "embedding", nlist = 16, iters = 3)
-        import s.implicits._
-        trained.toSeq.zipWithIndex
-          .map { case (v, i) => (i, v) }.toDF("bucket", "centroid")
-      }
-      val cent: Array[Seq[Float]] = centDf.orderBy(col("bucket"))
-        .select(col("centroid")).collect().map(_.getSeq[Float](0))
-      val bucketed = artifact(s, dir, "ivf_buckets")(
+  private def ivfIndex(s: SparkSession, dir: String): (Array[Seq[Float]], DataFrame) =
+    memo(s, dir, "ivf_index") {
+      val cent = centroidArtifact(s, dir, "ivf_centroids")(
+        Similarity.ivfTrain(embeddings(s, dir),
+          "vec_id", "embedding", nlist = 16, iters = 3))
+      (cent, artifact(s, dir, "ivf_buckets")(
         Similarity.ivfBucketedCorpus(embeddings(s, dir),
-          "vec_id", "embedding", cent))
-      val v = (cent, bucketed)
-      ivfMemo.put(key, v)
-      v
+          "vec_id", "embedding", cent)))
     }
-  }
   private def embeddings(s: SparkSession, dir: String): DataFrame =
     graft.sources.ParquetNanos.read(s, s"$dir/embeddings.parquet")
 
@@ -283,125 +290,43 @@ object PipelineEntries {
     * training (init collect + 3 rounds, a driver aggregate+collect per
     * round) on EVERY invocation; the nightly-append query path only
     * ASSIGNS the increment to the existing centroids. Same
-    * write/collect-back discipline as [[ivfIndex]]: every value is
-    * float-representable (float-rounded Lloyd means; init vectors are
-    * corpus floats), so the parquet round trip is bit-exact and the
-    * DuckDB oracle reads literally the same trained state. */
-  private val ivfBaseMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[Seq[Float]]]
-  private def ivfBaseCentroids(s: SparkSession, dir: String): Array[Seq[Float]] = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    val hit = ivfBaseMemo.get(key)
-    if (hit != null) return hit
-    artifactLock.synchronized {
-      val again = ivfBaseMemo.get(key)
-      if (again != null) return again
-      val centDf = artifact(s, dir, "ivf_centroids_base") {
-        val trained = Similarity.ivfTrain(
-          embeddings(s, dir).filter(pmod(col("vec_id"), lit(10)) >= 2),
-          "vec_id", "embedding", nlist = 16, iters = 3)
-        import s.implicits._
-        trained.toSeq.zipWithIndex
-          .map { case (v, i) => (i, v) }.toDF("bucket", "centroid")
-      }
-      val cent: Array[Seq[Float]] = centDf.orderBy(col("bucket"))
-        .select(col("centroid")).collect().map(_.getSeq[Float](0))
-      ivfBaseMemo.put(key, cent)
-      cent
+    * write/collect-back discipline as [[ivfIndex]]
+    * ([[centroidArtifact]]). */
+  private def ivfBaseCentroids(s: SparkSession, dir: String): Array[Seq[Float]] =
+    memo(s, dir, "ivf_base") {
+      centroidArtifact(s, dir, "ivf_centroids_base")(Similarity.ivfTrain(
+        embeddings(s, dir).filter(pmod(col("vec_id"), lit(10)) >= 2),
+        "vec_id", "embedding", nlist = 16, iters = 3))
     }
-  }
 
   /** Residual-PQ codebooks over the [[ivfIndex]] centroids (the FAISS
-    * IndexIVFPQ trained state), persisted as `residual_codebooks`
-    * (s, j, cent: array<double>) and COLLECTED BACK from the written
-    * table, so the engine and the DuckDB oracle consume literally the
-    * same parquet state — every codebook value is float-representable
-    * (trainPq float-rounds means; init subvectors are corpus floats), so
-    * the write/read round trip is bit-exact. m*k*(dim/m) doubles: driver
-    * state stays codebook-sized by contract. */
-  private val residualCbMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[Array[Array[Double]]]]
+    * IndexIVFPQ trained state), persisted as `residual_codebooks` and
+    * collected back ([[codebookArtifact]]), so the engine and the DuckDB
+    * oracle consume literally the same parquet state. */
   private def residualCodebooks(s: SparkSession, dir: String,
-                                cent: Array[Seq[Float]]): Array[Array[Array[Double]]] = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    val hit = residualCbMemo.get(key)
-    if (hit != null) return hit
-    artifactLock.synchronized {
-      val again = residualCbMemo.get(key)
-      if (again != null) return again
-      val cbDf = artifact(s, dir, "residual_codebooks") {
-        val trained = graft.operators.Quantization.trainResidualCodebooks(
+                                cent: Array[Seq[Float]]): Array[Array[Array[Double]]] =
+    memo(s, dir, "residual_cb") {
+      codebookArtifact(s, dir, "residual_codebooks")(
+        graft.operators.Quantization.trainResidualCodebooks(
           embeddings(s, dir), "vec_id", "embedding", cent,
-          m = 8, kCodes = 16, iters = 3)
-        import s.implicits._
-        trained.zipWithIndex.flatMap { case (sub, si) =>
-          sub.zipWithIndex.map { case (cw, j) => (si, j, cw.toSeq) }
-        }.toSeq.toDF("s", "j", "cent")
-      }
-      val rows = cbDf.collect()
-      val m = rows.map(_.getInt(0)).max + 1
-      val kk = rows.map(_.getInt(1)).max + 1
-      // completeness: a truncated/partial artifact read would otherwise
-      // leave null cells surfacing as an opaque NPE far from the cause
-      // (advisor, round 19)
-      require(rows.length == m * kk,
-        s"residual_codebooks incomplete: ${rows.length} rows for ${m}x$kk")
-      val out = Array.ofDim[Array[Double]](m, kk)
-      rows.foreach { r =>
-        out(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray
-      }
-      residualCbMemo.put(key, out)
-      out
+          m = 8, kCodes = 16, iters = 3))
     }
-  }
 
   /** Plain (non-residual) PQ codebooks over the corpus vectors,
-    * persisted per (artifact name, iters) as `(s, j, cent:
-    * array<double>)` and COLLECTED BACK from the written table — the
-    * [[residualCodebooks]] discipline: every value is
-    * float-representable (trainPq float-rounds means; init subvectors
-    * are corpus floats), so the write/read round trip is bit-exact and
-    * the DuckDB oracle consumes literally the same parquet state.
+    * persisted per (artifact name, iters) and collected back — the
+    * [[residualCodebooks]] discipline ([[codebookArtifact]]).
     * Two instances exist because two entries trained with different
     * iteration counts long before the artifacts did: `pq_codebooks`
     * (iters=3, ann_ivfpq_topk) and `pq_codebooks_i2` (iters=2,
     * ann_pq_topk) — the artifact must reproduce each entry's historical
     * values exactly. */
-  private val pqCbMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[Array[Array[Double]]]]
   private def pqCodebooksAt(s: SparkSession, dir: String,
-                            name: String, iters: Int): Array[Array[Array[Double]]] = {
-    val key = s.sparkContext.applicationId + ":" + dir + ":" + name
-    val hit = pqCbMemo.get(key)
-    if (hit != null) return hit
-    artifactLock.synchronized {
-      val again = pqCbMemo.get(key)
-      if (again != null) return again
-      val cbDf = artifact(s, dir, name) {
-        val trained = graft.operators.Quantization.trainPq(
-          embeddings(s, dir), "vec_id", "embedding", m = 8, k = 16,
-          iters = iters)
-        import s.implicits._
-        trained.zipWithIndex.flatMap { case (sub, si) =>
-          sub.zipWithIndex.map { case (cw, j) => (si, j, cw.toSeq) }
-        }.toSeq.toDF("s", "j", "cent")
-      }
-      val rows = cbDf.collect()
-      val m = rows.map(_.getInt(0)).max + 1
-      val kk = rows.map(_.getInt(1)).max + 1
-      // completeness: a truncated/partial artifact read would otherwise
-      // leave null cells surfacing as an opaque NPE far from the cause
-      // (advisor, round 19)
-      require(rows.length == m * kk,
-        s"$name incomplete: ${rows.length} rows for ${m}x$kk")
-      val out = Array.ofDim[Array[Double]](m, kk)
-      rows.foreach { r =>
-        out(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray
-      }
-      pqCbMemo.put(key, out)
-      out
+                            name: String, iters: Int): Array[Array[Array[Double]]] =
+    memo(s, dir, s"$name:collected") {
+      codebookArtifact(s, dir, name)(graft.operators.Quantization.trainPq(
+        embeddings(s, dir), "vec_id", "embedding", m = 8, k = 16,
+        iters = iters))
     }
-  }
   private def pqCodebooks(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
     pqCodebooksAt(s, dir, "pq_codebooks", iters = 3)
 
@@ -460,34 +385,23 @@ object PipelineEntries {
     * literals and the DuckDB oracle consume literally the same state
     * (every value is float-representable — corpus float min/max — so
     * the write/read round trip is bit-exact). */
-  private val int8Memo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[(Double, Double)], DataFrame)]
-  private def int8Index(s: SparkSession, dir: String): (Array[(Double, Double)], DataFrame) = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    val hit = int8Memo.get(key)
-    if (hit != null) return hit
-    artifactLock.synchronized {
-      val again = int8Memo.get(key)
-      if (again != null) return again
-      val rangeDf = artifact(s, dir, "int8_ranges") {
+  private def int8Index(s: SparkSession, dir: String): (Array[(Double, Double)], DataFrame) =
+    memo(s, dir, "int8_index") {
+      val rows = artifact(s, dir, "int8_ranges") {
         val tr = graft.operators.Quantization.trainRanges(
           embeddings(s, dir), "embedding")
         import s.implicits._
         tr.zipWithIndex.map { case ((mn, mx), i) => (i, mn, mx) }.toSeq
           .toDF("pos", "mn", "mx")
-      }
-      val rows = rangeDf.collect()
+      }.collect()
       val ranges = new Array[(Double, Double)](rows.length)
       rows.foreach(r => ranges(r.getInt(0)) = (r.getDouble(1), r.getDouble(2)))
       val codes = artifact(s, dir, "int8_codes")(
         embeddings(s, dir).select(col("vec_id").as("n_id"),
           graft.operators.Quantization.encode(col("embedding"), ranges)
             .as("codes")))
-      val v = (ranges, codes)
-      int8Memo.put(key, v)
-      v
+      (ranges, codes)
     }
-  }
 
   /** Hash-sharded greedy sequence packing over (doc_id, lang, n_tokens):
     * route each doc to a deterministic shard (portable md5-56 of doc_id
@@ -888,9 +802,7 @@ object PipelineEntries {
     // LOW-df shingles, so the cap prunes only non-dup pair fanout)
     "dedup_ngram_blocked" -> ((s, dir) =>
       Dedup.ngramJaccardPairsBlockedFromSigs(docSigs(s, dir),
-        threshold = 0.3, dfCap = 10,
-        docFreq = Some(docShingleDf(s, dir)),
-        index = Some(repIndex(s, dir)))),
+        repIndex(s, dir), threshold = 0.3, dfCap = 10)),
 
     // the df-cap's measured honest boundary (round-17 hot-shingle rung):
     // pairs whose similarity lives ONLY on above-cap shingles — the
@@ -902,25 +814,22 @@ object PipelineEntries {
     // sf0.01 corpus has NO df>10 shingle at all — a cap-10 twin would be
     // trivially-green 0 rows, exactly the weak-check class the gates
     // exist to avoid (measured: cap 5 → 13 verified rep pairs at
-    // sf0.01, 241 at sf0.1). The shared shingle_df artifact is
-    // cap-agnostic (raw rep-based counts; the operator applies the cap),
-    // so both entries read the same prepare-once table.
+    // sf0.01, 241 at sf0.1). The shared rep index is cap-agnostic (raw
+    // rep-based counts; the operator applies the cap), so both entries
+    // read the same prepare-once tables.
     "dedup_stop_profile" -> ((s, dir) =>
-      Dedup.stopProfilePairsFromSigs(docSigs(s, dir),
-        threshold = 0.3, dfCap = 5,
-        docFreq = Some(docShingleDf(s, dir)), bucketCap = 1000,
-        index = Some(repIndex(s, dir)))),
+      Dedup.stopProfilePairsFromSigs(docSigs(s, dir), repIndex(s, dir),
+        threshold = 0.3, dfCap = 5, bucketCap = 1000)),
 
     // the family-level product the stop-profile pass's scale contract
     // prescribes for above-bucketCap boilerplate families (their pair
     // expansion is quadratic BY DEFINITION): the family itself —
     // (family_id = min member doc id, doc_id, family_size), linear at
     // any family size, no self-join, no cap, no lost mass. Same dfCap=5
-    // basis and shared shingle_df artifact as dedup_stop_profile.
+    // basis and shared rep index as dedup_stop_profile.
     "dedup_stop_profile_families" -> ((s, dir) =>
-      Dedup.stopProfileFamilies(docSigs(s, dir), dfCap = 5,
-        docFreq = Some(docShingleDf(s, dir)),
-        index = Some(repIndex(s, dir)))),
+      Dedup.stopProfileFamilies(docSigs(s, dir), repIndex(s, dir),
+        dfCap = 5)),
 
     // exact sliding-window substring dup at arbitrary alignment —
     // catches cross-offset spans that dedup_chunks' aligned chunks miss

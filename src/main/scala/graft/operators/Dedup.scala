@@ -307,8 +307,9 @@ object Dedup {
     * shared input of every hash-verified dedup operator below
     * (minhash/LSH, exact & blocked n-gram Jaccard, cluster resolution):
     * derive it once per corpus, persist/write it, and run each operator
-    * from it via the `*FromSigs` variants. The tokenize+shingle+hash scan
-    * is the single most expensive stage of the dedup pipeline (interpreted
+    * from it (the `*FromSigs` forms, [[pairCountsFromSigs]] and
+    * [[repIndexFromSigs]]). The tokenize+shingle+hash scan is the
+    * single most expensive stage of the dedup pipeline (interpreted
     * HOF transforms over every document), so at any scale — 5k docs on a
     * laptop or 100 TB on a cluster — it must be paid once, not once per
     * operator. Long equality also beats UTF8 compares ~10x during
@@ -508,31 +509,9 @@ object Dedup {
     // Both persisted ([[repSignatures]]): the explode and both
     // verify-join sides of bandedVerify consume repSigs.
     val (rep, repSigs) = repSignatures(withG)
-    val repPairs = bandedVerify(repSigs)
-    // ---- expansion back over replica groups ---------------------------
-    // within a group: every pair, jaccard exactly 1.0 (identical sets —
-    // the same value jaccardNative returns for them); across groups:
-    // every member pair inherits the representatives' jaccard. Groups
-    // are disjoint, so the union is duplicate-free, like the original
-    // all-docs banding output.
-    val members = withG.select(col("g"), col("id"))
-    val dupGroups = rep.filter(col("cnt") >= 2).select(col("g"))
-    val internal = members.join(dupGroups.hint("shuffle_hash"), "g")
-      .select(col("g"), col("id").as("xa"))
-      .join(members.select(col("g"), col("id").as("xb")).hint("shuffle_hash"),
-        "g")
-      .filter(col("xa") < col("xb"))
-      .select(col("xa").as("a_id"), col("xb").as("b_id"),
-        lit(1.0).as("jaccard"))
-    val repG = rep.select(col("id"), col("g"))
-    val cross = repPairs
-      .join(repG.select(col("id").as("a_id"), col("g").as("ga")), "a_id")
-      .join(repG.select(col("id").as("b_id"), col("g").as("gb")), "b_id")
-      .join(members.select(col("g").as("ga"), col("id").as("xa")), "ga")
-      .join(members.select(col("g").as("gb"), col("id").as("xb")), "gb")
-      .select(least(col("xa"), col("xb")).as("a_id"),
-        greatest(col("xa"), col("xb")).as("b_id"), col("jaccard"))
-    internal.unionByName(cross)
+    // expansion back over replica groups (groups are disjoint, so the
+    // union is duplicate-free, like the original all-docs banding output)
+    expandRepPairs(bandedVerify(repSigs), rep, withG.select(col("g"), col("id")))
   }
 
   /** Ensure a signature table carries a set-equality digest column `g`:
@@ -651,8 +630,8 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         n: Int = 3, threshold: Double = 0.3,
                         stage: Option[Boolean] = None): DataFrame =
-    ngramJaccardPairsFromSigs(
-      staged(signatures(df, idCol, textCol, n), stage), threshold)
+    jaccardFromPairCounts(pairCountsFromSigs(
+      staged(signatures(df, idCol, textCol, n), stage)), threshold)
 
   /** Shared-shingle pair counts from a [[signatures]] table: ONE
     * inverted-index self-join + count aggregation producing
@@ -691,7 +670,8 @@ object Dedup {
       .select(col("a_id"), col("b_id"), round(col("jaccard"), 4).as("jaccard"))
 
   /** Containment pairs as a filter over [[pairCountsFromSigs]]:
-    * containment = shared / min(|A|, |B|). */
+    * containment = shared / min(|A|, |B|) — the asymmetric companion of
+    * Jaccard, catching a short document embedded in a longer one. */
   def containmentFromPairCounts(pc: DataFrame,
                                 threshold: Double = 0.8): DataFrame =
     pc.withColumn("containment",
@@ -700,11 +680,6 @@ object Dedup {
       .filter(col("containment") >= threshold)
       .select(col("a_id"), col("b_id"),
         round(col("containment"), 4).as("containment"))
-
-  /** [[ngramJaccardPairs]] from a pre-computed [[signatures]] table. */
-  def ngramJaccardPairsFromSigs(sigs: DataFrame,
-                                threshold: Double = 0.3): DataFrame =
-    jaccardFromPairCounts(pairCountsFromSigs(sigs), threshold)
 
   /** Scale path for n-gram Jaccard: identical verification (TRUE jaccard
     * over full shingle sets via array_intersect), but candidate
@@ -717,50 +692,17 @@ object Dedup {
   def ngramJaccardPairsBlocked(df: DataFrame, idCol: String, textCol: String,
                                n: Int = 3, threshold: Double = 0.3,
                                dfCap: Int = 50,
-                               stage: Option[Boolean] = None): DataFrame =
-    ngramJaccardPairsBlockedFromSigs(
-      staged(signatures(df, idCol, textCol, n), stage), threshold, dfCap)
+                               stage: Option[Boolean] = None): DataFrame = {
+    val sigs = staged(signatures(df, idCol, textCol, n), stage)
+    ngramJaccardPairsBlockedFromSigs(sigs, repIndexFromSigs(sigs),
+      threshold, dfCap)
+  }
 
-  /** Containment pairs from a pre-computed [[signatures]] table:
-    * |A∩B| / min(|A|,|B|) >= threshold. The asymmetric companion of
-    * Jaccard — catches a short document EMBEDDED in a longer one (quote,
-    * boilerplate wrapper, superset page), which symmetric Jaccard
-    * misses because the union is dominated by the longer side. Same
-    * inverted-index join shape as [[ngramJaccardPairsFromSigs]]. */
-  def containmentPairsFromSigs(sigs: DataFrame,
-                               threshold: Double = 0.8): DataFrame =
-    containmentFromPairCounts(pairCountsFromSigs(sigs), threshold)
-
-  /** [[ngramJaccardPairsBlocked]] from a pre-computed [[signatures]]
-    * table.
-    *
-    * Candidate generation: df-count the shingles, keep the rare ones
-    * (2..dfCap docs), self-join the capped inverted index. All
-    * whole-stage-codegen'd hash joins/aggs on (long, long) rows, and —
-    * the scale-critical property — no row ever exceeds O(1) size (a
-    * collect_list-per-shingle variant would turn a stop-shingle's
-    * posting list into one multi-MB row).
-    *
-    * Verification is COUNT-based, fused into candidate generation: the
-    * pair aggregation that dedups candidates also counts their shared
-    * rare shingles, and the full shared count decomposes exactly as
-    *   shared = shared_rare + |stop(A) ∩ stop(B)|
-    * (a df=1 shingle is in neither class and can never be shared), where
-    * stop(X) is X's df>dfCap shingle list — tiny by construction: a
-    * corpus has few distinct stop-shingles, so the per-doc stop arrays
-    * stay small and broadcastable even when posting lists are huge.
-    * This replaces the earlier distinct-pairs exchange + two full
-    * signature-array joins + per-pair array verification (the dominant
-    * cost at 1M+ candidates; ~2x faster at sf0.1) while producing the
-    * identical pair set — the oracle states the same contract over full
-    * string shingle sets. */
   /** The |vocab| shingle document-frequency table over a [[signatures]]
-    * table — a prepare-once artifact: callers running the blocked
-    * operator more than once per corpus should build this once, persist
-    * or write it, and pass it to [[ngramJaccardPairsBlockedFromSigs]].
-    * For the blocked operator the input must be the REPRESENTATIVE
-    * signature table ([[repSignatures]]): the blocked contract counts
-    * document frequency over distinct-text representatives. */
+    * table. [[repIndexFromSigs]] classifies its inverted index with this
+    * table over the REPRESENTATIVE signatures ([[repSignatures]]): the
+    * blocked contract counts document frequency over distinct-text
+    * representatives. */
   def shingleDocFreq(sigs: DataFrame): DataFrame =
     sigs.select(col("id"), explode(col("hs")).as("g"))
       .groupBy(col("g")).agg(count(lit(1)).as("c"))
@@ -791,8 +733,7 @@ object Dedup {
     * Before round 20 each invocation re-derived all three (a corpus
     * aggregate, a join, and an explode+join+persist per pass); callers
     * running more than once per corpus should build this once via
-    * [[repIndexFromSigs]], persist/write it, and pass it in — the same
-    * prepare-once discipline as [[shingleDocFreq]]. Both the rare-
+    * [[repIndexFromSigs]], persist/write it, and pass it in. Both the rare-
     * candidate branch (c <= dfCap) and the stop-profile branch
     * (c > dfCap) are filters over `inverted`, so the previous
     * broadcast-the-stop-vocab join disappears entirely: the profile
@@ -804,23 +745,48 @@ object Dedup {
 
   /** Build a [[RepIndex]] from a signature table (pooled persists —
     * prepare-once callers should write the three tables to parquet and
-    * re-wrap them instead). `docFreq` is the rep-based [[shingleDocFreq]]
-    * table when the caller already has it as an artifact. */
-  def repIndexFromSigs(sigs: DataFrame,
-                       docFreq: Option[DataFrame] = None): RepIndex = {
-    val (rep, repSigs) = repSignatures(withSetDigest(sigs))
-    val dfc = docFreq.getOrElse(pooledPersist(shingleDocFreq(repSigs)))
+    * re-wrap them instead). The df is over repSigs, the rep-df contract
+    * of every pass that reads the index: df over raw sigs would count
+    * replicas, and on a replica-heavy corpus every shingle would blow
+    * the cap. The classified inverted index joins df ONCE keeping c; its
+    * explicit persist makes the rare/stop two-branch sharing real and
+    * gives AQE exact build-side stats — the exchange reuse the naive
+    * formulation bets on does not materialize under AQE. */
+  def repIndexFromSigs(sigs: DataFrame): RepIndex = {
+    val (rep, repSigs) = repSignatures(sigs)
+    val dfc = pooledPersist(shingleDocFreq(repSigs))
     val inv = repSigs.select(col("id"), explode(col("hs")).as("g"))
     val inverted = pooledPersist(inv.join(dfc.filter(col("c") >= 2), Seq("g"))
       .select(col("id"), col("g"), col("c")))
     RepIndex(rep, repSigs, inverted)
   }
 
-  def ngramJaccardPairsBlockedFromSigs(sigs: DataFrame,
+  /** [[ngramJaccardPairsBlocked]] from a pre-computed [[signatures]]
+    * table.
+    *
+    * Candidate generation: df-count the shingles, keep the rare ones
+    * (2..dfCap docs), self-join the capped inverted index. All
+    * whole-stage-codegen'd hash joins/aggs on (long, long) rows, and —
+    * the scale-critical property — no row ever exceeds O(1) size (a
+    * collect_list-per-shingle variant would turn a stop-shingle's
+    * posting list into one multi-MB row).
+    *
+    * Verification is COUNT-based, fused into candidate generation: the
+    * pair aggregation that dedups candidates also counts their shared
+    * rare shingles, and the full shared count decomposes exactly as
+    *   shared = shared_rare + |stop(A) ∩ stop(B)|
+    * (a df=1 shingle is in neither class and can never be shared), where
+    * stop(X) is X's df>dfCap shingle list — tiny by construction: a
+    * corpus has few distinct stop-shingles, so the per-doc stop arrays
+    * stay small and broadcastable even when posting lists are huge.
+    * This replaces the earlier distinct-pairs exchange + two full
+    * signature-array joins + per-pair array verification (the dominant
+    * cost at 1M+ candidates; ~2x faster at sf0.1) while producing the
+    * identical pair set — the oracle states the same contract over full
+    * string shingle sets. */
+  def ngramJaccardPairsBlockedFromSigs(sigs: DataFrame, index: RepIndex,
                                        threshold: Double = 0.3,
-                                       dfCap: Int = 50,
-                                       docFreq: Option[DataFrame] = None,
-                                       index: Option[RepIndex] = None): DataFrame = {
+                                       dfCap: Int = 50): DataFrame = {
     // ---- exact-replica pre-pass (always on) ---------------------------
     // The df basis AND the candidate universe are the exact-text
     // representatives (min id per text digest): replicas inflate every
@@ -839,21 +805,7 @@ object Dedup {
     // make the pair set depend on corpus statistics — and the oracle
     // restates the same rep-based contract verbatim.
     val withG = withSetDigest(sigs)
-    val idx = index.getOrElse {
-      // |vocab|-sized df; BOTH the rare-candidate filter and the stop-
-      // shingle profile consume it. Fallback df is over repSigs,
-      // matching the documented rep-df contract above and the
-      // stop-profile passes — df over raw sigs would count replicas,
-      // and on a replica-heavy corpus every shingle would blow the cap
-      // (candidate-set collapse) while the supplied-artifact path
-      // stayed rep-based (advisor, round 18). The classified inverted
-      // index joins df ONCE keeping c; an explicit persist (inside
-      // [[repIndexFromSigs]]) makes the two-branch sharing real and
-      // gives AQE exact build-side stats — the exchange-reuse the naive
-      // formulation bets on does not materialize under AQE.
-      repIndexFromSigs(withG, docFreq)
-    }
-    val (rep, repSigs, invC) = (idx.rep, idx.repSigs, idx.inverted)
+    val (rep, repSigs, invC) = (index.rep, index.repSigs, index.inverted)
     val members = withG.select(col("g"), col("id"))
     val hs = repSigs.select(col("id"), col("hs"))
     val invR = invC.filter(col("c") <= dfCap).select(col("id"), col("g"))
@@ -904,8 +856,8 @@ object Dedup {
     * exact-replica groups: within-group pairs are exact replicas
     * (jaccard 1.0 by set identity), cross-group member pairs inherit
     * their representatives' jaccard (identical shingle sets). Groups are
-    * disjoint, so the union is duplicate-free — the same expansion shape
-    * the minhash pre-pass uses inline. `rep` = (g, id, cnt) and
+    * disjoint, so the union is duplicate-free. Shared by the minhash
+    * pre-pass and the rep-based passes. `rep` = (g, id, cnt) and
     * `members` = (g, id) from [[repSignatures]]/[[withSetDigest]]. */
   private def expandRepPairs(repPairs: DataFrame, rep: DataFrame,
                              members: DataFrame): DataFrame = {
@@ -961,18 +913,12 @@ object Dedup {
     * at jaccard 1.0; cross-group member pairs inherit the rep pair's
     * jaccard). The oracle restates the identical contract over string
     * shingles — profile equality is hash-independent. */
-  def stopProfilePairsFromSigs(sigs: DataFrame,
+  def stopProfilePairsFromSigs(sigs: DataFrame, index: RepIndex,
                                threshold: Double = 0.3,
                                dfCap: Int = 50,
-                               docFreq: Option[DataFrame] = None,
-                               bucketCap: Int = 1000,
-                               index: Option[RepIndex] = None): DataFrame = {
+                               bucketCap: Int = 1000): DataFrame = {
     val withG = withSetDigest(sigs)
-    // df over representatives (the blocked contract's basis); callers
-    // with prepare-once artifacts pass the [[RepIndex]] (or at least
-    // the [[shingleDocFreq]] table) in
-    val idx = index.getOrElse(repIndexFromSigs(withG, docFreq))
-    val (rep, repSigs) = (idx.rep, idx.repSigs)
+    val (rep, repSigs) = (index.rep, index.repSigs)
     val members = withG.select(col("g"), col("id"))
     val hs = repSigs.select(col("id"), col("hs"))
     // per-rep stop profile: the SORTED array of this doc's above-cap
@@ -985,7 +931,7 @@ object Dedup {
     // 1M-member family, ProbeStopFamilies round-18) is subsumed by the
     // classified index — c rides every (id, g) row, so the profile
     // pass is per-doc parallel with zero exchanges before groupBy(id).
-    val stops = idx.inverted.filter(col("c") > dfCap)
+    val stops = index.inverted.filter(col("c") > dfCap)
       .groupBy(col("id"))
       .agg(sort_array(collect_list(col("g"))).as("stop"))
     val keyed = pooledPersist(stops.select(col("id"),
@@ -1028,7 +974,7 @@ object Dedup {
     * hash-independent cluster key both engines derive identically, so
     * the DuckDB twin needs no access to the hash domain. Linear at ANY
     * family size: one df classification (the shared prepare-once
-    * [[shingleDocFreq]] artifact), one profile groupBy, one count
+    * [[RepIndex]]), one profile groupBy, one count
     * aggregate, one bucket re-join — no self-join, no cap, no lost
     * mass. Downstream keeps one doc per family (or runs the pair pass
     * within a family when it needs per-pair jaccard) without ever
@@ -1041,13 +987,10 @@ object Dedup {
     * extrapolates to minutes at 100M members, where the product is
     * still the only feasible one). Everything upstream is per-doc
     * parallel after the stop-vocab broadcast. */
-  def stopProfileFamilies(sigs: DataFrame,
-                          dfCap: Int = 50,
-                          docFreq: Option[DataFrame] = None,
-                          index: Option[RepIndex] = None): DataFrame = {
+  def stopProfileFamilies(sigs: DataFrame, index: RepIndex,
+                          dfCap: Int = 50): DataFrame = {
     val withG = withSetDigest(sigs)
-    val idx = index.getOrElse(repIndexFromSigs(withG, docFreq))
-    val rep = idx.rep
+    val rep = index.rep
     // per-rep stop profile, digested — same construction as the pair
     // pass (a digest collision here would merge two families, P ~ 2^-128
     // over md5 of the canonical sorted profile — the same w.h.p.
@@ -1059,7 +1002,7 @@ object Dedup {
     // 2.1 s; the classified index subsumes the broadcast too — c rides
     // every (id, g) row, so the pass is per-doc parallel with zero
     // pre-aggregation exchanges.)
-    val stops = idx.inverted.filter(col("c") > dfCap)
+    val stops = index.inverted.filter(col("c") > dfCap)
       .groupBy(col("id"))
       .agg(sort_array(collect_list(col("g"))).as("stop"))
     val keyed = stops.select(col("id").as("rid"),

@@ -41,8 +41,8 @@ object ProbeBlocked {
 
     // full operator (what the bench times)
     timeIt("full") {
-      Dedup.ngramJaccardPairsBlockedFromSigs(sigs, threshold = 0.3,
-        dfCap = 10, docFreq = Some(dfc))
+      Dedup.ngramJaccardPairsBlockedFromSigs(sigs,
+        Dedup.repIndexFromSigs(sigs), threshold = 0.3, dfCap = 10)
     }
     // the complete PRE-round-14 formulation (prof built per pair side,
     // never persisted), inline for same-session comparison

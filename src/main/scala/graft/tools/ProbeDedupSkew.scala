@@ -108,7 +108,7 @@ object ProbeDedupSkew {
 
     def timed(dfCap: Int): (DataFrame, Double, Long, Long, Long) = {
       val df = Dedup.ngramJaccardPairsBlockedFromSigs(sigs,
-        threshold = 0.3, dfCap = dfCap)
+        Dedup.repIndexFromSigs(sigs), threshold = 0.3, dfCap = dfCap)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       mt.reset()
       val t0 = System.nanoTime()
@@ -120,8 +120,9 @@ object ProbeDedupSkew {
     }
 
     // warmup (JIT) on a small slice, then the two measured forms
-    Dedup.ngramJaccardPairsBlockedFromSigs(
-      sigs.filter(col("id") < 2000), threshold = 0.3, dfCap = 50).count()
+    val warm = sigs.filter(col("id") < 2000)
+    Dedup.ngramJaccardPairsBlockedFromSigs(warm,
+      Dedup.repIndexFromSigs(warm), threshold = 0.3, dfCap = 50).count()
     Dedup.releaseIntermediates()
     val (capped, capSec, capMax, capTasks, capRows) = timed(50)
     val (uncapped, unSec, unMax, unTasks, unRows) = timed(Int.MaxValue)
@@ -150,7 +151,8 @@ object ProbeDedupSkew {
     // staying clear of the hot-shingle quadratic (the {H0}-only profile
     // bucket holds ~n/5 docs and is excluded by bucketCap).
     val sp = Dedup.stopProfilePairsFromSigs(sigs,
-      threshold = 0.3, dfCap = 50, bucketCap = 1000)
+      Dedup.repIndexFromSigs(sigs), threshold = 0.3, dfCap = 50,
+      bucketCap = 1000)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     mt.reset()
     val spT0 = System.nanoTime()

@@ -102,10 +102,11 @@ object ProbeStopFamilies {
     // JIT warmup on a small slice of both forms
     {
       val w = makeSigs(spark, 200L)
-      Dedup.stopProfileFamilies(w, dfCap = 50).count()
+      Dedup.stopProfileFamilies(w, Dedup.repIndexFromSigs(w), dfCap = 50)
+        .count()
       Dedup.releaseIntermediates()
-      Dedup.stopProfilePairsFromSigs(w, threshold = 0.3, dfCap = 50,
-        bucketCap = Int.MaxValue).count()
+      Dedup.stopProfilePairsFromSigs(w, Dedup.repIndexFromSigs(w),
+        threshold = 0.3, dfCap = 50, bucketCap = Int.MaxValue).count()
       Dedup.releaseIntermediates()
     }
 
@@ -116,10 +117,12 @@ object ProbeStopFamilies {
       val expectPairs = f * (f - 1) / 2
 
       val (famSec, famMax, famTasks, famRows) =
-        timed(Dedup.stopProfileFamilies(sigs, dfCap = 50))
+        timed(Dedup.stopProfileFamilies(sigs, Dedup.repIndexFromSigs(sigs),
+          dfCap = 50))
       require(famRows == f, s"F=$f: families emitted $famRows rows, want $f")
       // gate: one family, id 0, every row carrying size F
-      val famChk = Dedup.stopProfileFamilies(sigs, dfCap = 50)
+      val famChk = Dedup.stopProfileFamilies(sigs,
+          Dedup.repIndexFromSigs(sigs), dfCap = 50)
         .agg(countDistinct(col("family_id")).as("nf"),
           min(col("family_id")).as("fid"),
           min(col("family_size")).as("mn"), max(col("family_size")).as("mx"))
@@ -132,8 +135,9 @@ object ProbeStopFamilies {
       val pairPart =
         if (expectPairs <= pairsMax) {
           val (pSec, pMax, pTasks, pRows) =
-            timed(Dedup.stopProfilePairsFromSigs(sigs, threshold = 0.3,
-              dfCap = 50, bucketCap = Int.MaxValue))
+            timed(Dedup.stopProfilePairsFromSigs(sigs,
+              Dedup.repIndexFromSigs(sigs), threshold = 0.3, dfCap = 50,
+              bucketCap = Int.MaxValue))
           require(pRows == expectPairs,
             s"F=$f: pair form emitted $pRows rows, want $expectPairs")
           s""""pairs":{"sec":${f"$pSec%.3f"},"max_task_ms":$pMax,""" +

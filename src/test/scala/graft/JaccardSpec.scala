@@ -73,12 +73,14 @@ class JaccardSpec extends SparkSpec {
     val hot = (300L to 311L).map(id => (id, Seq(50L) ++ uniq(id, 40)))
     val sigs = (boiler ++ replica ++ rare ++ hot).toDF("id", "hs")
 
-    val exhaustive = Dedup.ngramJaccardPairsFromSigs(sigs, threshold = 0.3)
+    val idx = Dedup.repIndexFromSigs(sigs)
+    val exhaustive = Dedup.jaccardFromPairCounts(
+        Dedup.pairCountsFromSigs(sigs), threshold = 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val blocked = Dedup.ngramJaccardPairsBlockedFromSigs(sigs,
+    val blocked = Dedup.ngramJaccardPairsBlockedFromSigs(sigs, idx,
       threshold = 0.3, dfCap = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val sp = Dedup.stopProfilePairsFromSigs(sigs,
+    val sp = Dedup.stopProfilePairsFromSigs(sigs, idx,
       threshold = 0.3, dfCap = 3, bucketCap = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
 
@@ -122,7 +124,8 @@ class JaccardSpec extends SparkSpec {
     val hot = (300L to 311L).map(id => (id, Seq(50L) ++ uniq(id, 40)))
     val sigs = (boiler ++ replica ++ rare ++ hot).toDF("id", "hs")
 
-    val fams = Dedup.stopProfileFamilies(sigs, dfCap = 3)
+    val fams = Dedup.stopProfileFamilies(sigs, Dedup.repIndexFromSigs(sigs),
+        dfCap = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
 
     // boilerplate family (ids 100..106, replica expanded): one family,
@@ -167,12 +170,14 @@ class JaccardSpec extends SparkSpec {
       assert(!Dedup.autoStage(sigs))
   }
 
-  test("supplied RepIndex == self-derived for blocked, stop-profile and families (round-20 pin)") {
-    // round 20 moved the rep collapse + df-classified inverted index to
-    // prepare-once artifacts; a supplied index must be a pure
+  test("a RepIndex read back from parquet gives the in-memory pairs and families") {
+    // the PipelineEntries path: the rep collapse + df-classified inverted
+    // index are written once as prepare artifacts and every later pass
+    // reads the parquet back. The round trip must be a pure
     // materialization choice — identical pair/family sets, identical
-    // jaccard values. Fixture: the adversarial mix from the recovery
-    // test (boilerplate family + replica + rare pair + hot bucket).
+    // jaccard values (the round-20 pin). Fixture: the adversarial mix
+    // from the recovery test (boilerplate family + replica + rare pair +
+    // hot bucket).
     def uniq(id: Long, k: Int): Seq[Long] = (0 until k).map(j => id * 64 + j + 100000L)
     val boiler = (100L to 105L).map(id => (id, (1L to 30L) ++ uniq(id, 2)))
     val replica = Seq((106L, (1L to 30L) ++ uniq(105L, 2)))
@@ -181,22 +186,31 @@ class JaccardSpec extends SparkSpec {
       (201L, (900L to 934L) ++ uniq(201L, 5)))
     val hot = (300L to 311L).map(id => (id, Seq(50L) ++ uniq(id, 40)))
     val sigs = (boiler ++ replica ++ rare ++ hot).toDF("id", "hs")
-    val idx = Dedup.repIndexFromSigs(sigs)
+    val mem = Dedup.repIndexFromSigs(sigs)
+    val root = java.nio.file.Files.createTempDirectory("repindex").toString
+    def roundTrip(df: org.apache.spark.sql.DataFrame, name: String) = {
+      df.write.mode("overwrite").parquet(s"$root/$name")
+      spark.read.parquet(s"$root/$name")
+    }
+    val disk = Dedup.RepIndex(roundTrip(mem.rep, "rep_map"),
+      roundTrip(mem.repSigs, "rep_sigs"), roundTrip(mem.inverted, "rep_inverted"))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(rows(Dedup.ngramJaccardPairsBlockedFromSigs(sigs,
-        threshold = 0.3, dfCap = 3, index = Some(idx)))
-      === rows(Dedup.ngramJaccardPairsBlockedFromSigs(sigs,
-        threshold = 0.3, dfCap = 3)))
-    assert(rows(Dedup.stopProfilePairsFromSigs(sigs,
-        threshold = 0.3, dfCap = 3, bucketCap = 10, index = Some(idx)))
-      === rows(Dedup.stopProfilePairsFromSigs(sigs,
-        threshold = 0.3, dfCap = 3, bucketCap = 10)))
     def famRows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(famRows(Dedup.stopProfileFamilies(sigs, dfCap = 3,
-        index = Some(idx)))
-      === famRows(Dedup.stopProfileFamilies(sigs, dfCap = 3)))
+    val blocked = rows(Dedup.ngramJaccardPairsBlockedFromSigs(sigs, mem,
+      threshold = 0.3, dfCap = 3))
+    assert(blocked.nonEmpty)
+    assert(rows(Dedup.ngramJaccardPairsBlockedFromSigs(sigs, disk,
+      threshold = 0.3, dfCap = 3)) === blocked)
+    val sp = rows(Dedup.stopProfilePairsFromSigs(sigs, mem,
+      threshold = 0.3, dfCap = 3, bucketCap = 10))
+    assert(sp.nonEmpty)
+    assert(rows(Dedup.stopProfilePairsFromSigs(sigs, disk,
+      threshold = 0.3, dfCap = 3, bucketCap = 10)) === sp)
+    val fams = famRows(Dedup.stopProfileFamilies(sigs, mem, dfCap = 3))
+    assert(fams.nonEmpty)
+    assert(famRows(Dedup.stopProfileFamilies(sigs, disk, dfCap = 3)) === fams)
   }
 
   test("signatures + FromSigs variants equal the text-based operators") {
@@ -205,8 +219,64 @@ class JaccardSpec extends SparkSpec {
     val fromText = Dedup.ngramJaccardPairsBlocked(docs, "doc_id", "text",
       n = 3, threshold = 0.3, dfCap = 30).collect().toSet
     val fromSigs = Dedup.ngramJaccardPairsBlockedFromSigs(sigs,
-      threshold = 0.3, dfCap = 30).collect().toSet
+      Dedup.repIndexFromSigs(sigs), threshold = 0.3, dfCap = 30).collect().toSet
     assert(fromText === fromSigs)
     assert(fromSigs.nonEmpty)
+  }
+
+  test("pipeline memo builds once under concurrency and allows nested builds") {
+    import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+    val scope = "memo-spec-" + System.nanoTime()
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val go = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(8)
+    val got = try {
+      val fs = (1 to 8).map(_ => pool.submit(new Callable[AnyRef] {
+        def call(): AnyRef = {
+          go.await()
+          PipelineEntries.memo(spark, scope, "k") {
+            builds.incrementAndGet()
+            Thread.sleep(100) // hold the build open while the others arrive
+            new Object
+          }
+        }
+      }))
+      go.countDown()
+      fs.map(_.get(60, TimeUnit.SECONDS))
+    } finally pool.shutdown()
+    assert(builds.get === 1)
+    assert(got.forall(_ eq got.head))
+
+    // nested: a build that looks up another key from inside the lock
+    val outer = PipelineEntries.memo(spark, scope, "outer") {
+      Tuple1(PipelineEntries.memo(spark, scope, "inner")(new Object))
+    }
+    assert(outer._1 eq PipelineEntries.memo(spark, scope, "inner")(new Object))
+
+    // the real case: on a fresh corpus, the pair_counts artifact build
+    // re-enters the memo to build the signatures artifact
+    val dir = java.nio.file.Files.createTempDirectory("memo_corpus").toString
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$sfDir/documents.parquet"),
+      java.nio.file.Paths.get(s"$dir/documents.parquet"))
+    val root = new java.io.File(PipelineEntries.artifactRoot(dir))
+    try {
+      val viaMemo = PipelineEntries.queries("dedup_ngram_jaccard")(spark, dir)
+        .collect().toSet
+      assert(new java.io.File(root, "signatures/_SUCCESS").exists())
+      assert(new java.io.File(root, "pair_counts/_SUCCESS").exists())
+      val docs = graft.sources.ParquetNanos.read(spark, s"$dir/documents.parquet")
+      val direct = Dedup.jaccardFromPairCounts(Dedup.pairCountsFromSigs(
+        Dedup.signatures(docs, "doc_id", "text", 3)), threshold = 0.3)
+        .collect().toSet
+      assert(viaMemo === direct)
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles).foreach(_.foreach(rm))
+        f.delete()
+      }
+      rm(root)
+      rm(new java.io.File(dir))
+    }
   }
 }
